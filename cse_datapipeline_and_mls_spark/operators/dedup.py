@@ -494,11 +494,6 @@ def ngram_containment_self_pairs(
     )
 
 
-# Rounds the most recent connected_components run took to converge —
-# the warm-start test observable.
-_LAST_CC_ROUNDS: int = 0
-
-
 def _cc_union_find(canon: DataFrame) -> DataFrame:
     """Closed-form connected components for a SMALL, already-materialized
     canonical edge list: collect → union-find (path compression + union
@@ -579,7 +574,7 @@ def connected_components(
     id, prior label); a prior label is the min id of the node's old
     component, which still belongs to its current (possibly merged)
     component, so convergence and the min-id contract are unchanged —
-    only the rounds shrink (_LAST_CC_ROUNDS asserts this in tests).
+    only the rounds shrink (tests count the jobs of both paths).
     NOT valid under pair deletion: a departed min-id node would leave
     a stale label no propagation can correct — rerun cold after
     compaction instead.
@@ -596,8 +591,8 @@ def connected_components(
     loop runs unchanged (and for deep graphs,
     connected_components_star). The fast path ignores ``init_labels``
     (it is exact from scratch; warm-start only accelerates the
-    iterative loop) and reports ``_LAST_CC_ROUNDS = 0``. Pass
-    ``small_graph_max_edges=None`` or 0 to force the iterative path.
+    iterative loop). Pass ``small_graph_max_edges=None`` or 0 to force
+    the iterative path.
     """
     # Materialize the upstream pair plan ONCE (eager localCheckpoint)
     # before building the bidirectional edge set. The previous
@@ -635,13 +630,11 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    global _LAST_CC_ROUNDS
     if small_graph_max_edges:
         # bounded probe on the ALREADY-materialized frame — cost capped
         # by the threshold, not the input
         probed = canon.limit(small_graph_max_edges + 1).count()
         if probed <= small_graph_max_edges:
-            _LAST_CC_ROUNDS = 0
             return _cc_union_find(canon)
     edges = (
         canon.union(canon.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -660,7 +653,6 @@ def connected_components(
             F.least(F.col("node"), F.coalesce("_prev", F.col("node"))).alias("label"),
         )
     labels = labels.localCheckpoint()
-    _LAST_CC_ROUNDS = 0
     converged = False
     for _ in range(max_iter):
         msgs = (
@@ -683,7 +675,6 @@ def connected_components(
         )
         changed = new_labels.filter(F.col("label") != F.col("old_label")).limit(1).count()
         labels = new_labels.drop("old_label")
-        _LAST_CC_ROUNDS += 1
         if changed == 0:
             converged = True
             break

@@ -19,47 +19,176 @@ Scale: rank state is 2 columns × |V|; each iteration's shuffle volume
 is |E| contributions. That is the irreducible cost of power iteration;
 at 100 TB-of-edges scale, pre-partition the edge table by src (bucketed
 layout) so only the contribution aggregation shuffles.
+
+Operators that normalize their input do it through one helper per edge
+shape: ``_canonical_edges`` (undirected, a < b), ``_symmetric_edges``
+(undirected, both directions) and ``_directed_edges`` (directed,
+materialized and hash-partitioned on src); ``_node_set`` gives the
+vertices of any of them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Partition count of the most recent pagerank() edge materialization —
-# a test observable (see the comment at the assignment site).
-_LAST_EDGE_PARTITIONS: int | None = None
-# Shuffle-exchange count in the most recent edge-materialization plan —
-# >=1 on the repartition path, 0 when a src-bucketed table feeds
-# pre_partitioned=True (the test observable for the bucketed layout).
-_LAST_EDGE_EXCHANGES: int | None = None
-# hits() twins of the two observables above (separate names so a test
-# interleaving pagerank and hits reads the right one).
-_LAST_HITS_EDGE_EXCHANGES: int | None = None
-_LAST_HITS_ITER_EXCHANGES: int | None = None
+# Power-iteration state (pagerank, personalized_pagerank, hits) is
+# localCheckpointed every this many iterations. Measured, not
+# arbitrary: each pagerank iteration references the previous state
+# THREE times (contributions, dangling mass, next state), so an
+# unmaterialized segment of length L re-derives its head up to 3^L
+# times. At sf0.1 (6 iterations, ~590 k edges): every-4 = 4.7 s,
+# every-2 = 4.1 s, every-1 = 4.0 s but with per-iteration checkpoint
+# overhead that grows with |V| and higher variance — every-2 bounds the
+# branching at 3² while paying half the checkpoints.
+_CHECKPOINT_EVERY = 2
 
 
-def _ensure_exchange_ids(df: DataFrame) -> set[str]:
-    """Unique plan_ids of ENSURE_REQUIREMENTS exchanges in a frame's
-    physical plan. Dedup matters: an InMemoryRelation reprints its
-    cached build plan (initial + final) at every reference, so a plain
-    substring count over a plan that scans cached tables counts the
-    build's exchanges several times over."""
-    import re
+def _canonical_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Undirected edges as distinct (a, b) pairs with a < b: direction,
+    duplicates, self-loops and null endpoints are dropped. Lazy — every
+    caller references it more than once and materializes it."""
+    return (
+        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .distinct()
+    )
 
-    s = df._jdf.queryExecution().executedPlan().toString()
-    return set(re.findall(r"ENSURE_REQUIREMENTS, \[plan_id=(\d+)\]", s))
-# Runtime (ENSURE_REQUIREMENTS) exchange count of the first iteration's
-# contribution plan — 2 with the cached hash-partitioned edge table
-# (state-side + dst aggregation), 3 if the edge side ever loses its
-# partitioning and re-shuffles |E| per iteration (the localCheckpoint
-# regression this file used to have: LogicalRDD drops outputPartitioning).
-_LAST_ITER_EXCHANGES: int | None = None
 
-# Exchange count of triangle_counts' canonical-edge frame — 0 when the
-# caller serves a pre-canonical bucketed edge table (assume_canonical),
-# >=1 when the operator canonicalized raw pairs itself.
-_LAST_TRI_CANON_EXCHANGES: int | None = None
+def _symmetric_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Undirected edges as distinct directed (a, b) pairs, each edge
+    present in both directions; self-loops and null endpoints are
+    dropped. The distinct runs AFTER the union, so an input that already
+    states both directions (or repeats an edge) yields each pair once."""
+    e = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+    )
+    return e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
+
+
+def _parallelism(df: DataFrame) -> int:
+    return max(df.sparkSession.sparkContext.defaultParallelism, 1)
+
+
+def _directed_edges(
+    edges: DataFrame, src: str = "src", dst: str = "dst", pre_partitioned: bool = False
+) -> DataFrame:
+    """Directed (src, dst) edges, hash-partitioned on src and
+    materialized ONCE for an iterative operator: every iteration joins
+    them, and without this the upstream plan (scans, joins, distinct)
+    re-executes per iteration.
+
+    Default: repartition to defaultParallelism, then localCheckpoint.
+    Repartition BEFORE materializing: a materialized plan freezes its
+    partitioning and is exempt from AQE coalescing, so freezing at the
+    session's shuffle.partitions (e.g. a vanilla session's 200) would
+    pin every iteration to hundreds of near-empty tasks — measured 15s →
+    272s at sf0.01 with a plain .cache(). defaultParallelism is
+    cluster-proportional, and hashing on src co-partitions the edges
+    with the per-iteration join key. localCheckpoint stores raw rows
+    and re-scans them for free, BUT its LogicalRDD drops
+    outputPartitioning, so every iteration's join re-shuffles the edge
+    side. In LOCAL mode that shuffle is a cheap disk spill and this
+    storage wins (measured at sf0.1 local[32]: 5.2 s vs 8.4 s).
+
+    ``pre_partitioned=True``: the caller vouches the input is already
+    hash-distributed on src — e.g. a src-bucketed table scan, whose
+    bucket hash IS the shuffle hash — so the |E|-sized repartition is
+    skipped and the frame is persisted instead: InMemoryRelation keeps
+    the cached plan's HashPartitioning, so the per-iteration edge-side
+    exchange disappears. Locally the columnar decode per iteration costs
+    more than the shuffle it saves; on a 1000-executor cluster the saved
+    exchange is |E| over the NETWORK per iteration, which dominates
+    (SCALE.md §graph). CacheManager entries are not reclaimed by GC, so
+    the caller unpersists the returned frame when done."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    if not pre_partitioned:
+        return e.repartition(_parallelism(edges), "src").localCheckpoint(eager=True)
+    e = e.persist()
+    e.count()
+    return e
+
+
+def _node_set(e: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """Distinct endpoints of an edge frame → (node)."""
+    return (
+        e.select(F.col(a).alias("node"))
+        .unionByName(e.select(F.col(b).alias("node")))
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame, name: str, a: str = "a", b: str = "b") -> DataFrame:
+    """Endpoint degree over an edge frame → (node, ``name``)."""
+    return (
+        e.select(F.col(a).alias("node"))
+        .unionByName(e.select(F.col(b).alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias(name))
+    )
+
+
+def _out_degrees(e: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(node, deg) for every node, 0 for nodes without out-edges. The
+    degree rides with the rank vector so the per-iteration join is
+    rank ⋈ edges only."""
+    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    return nodes.join(out_deg, nodes["node"] == out_deg["src"], "left").select(
+        "node", F.coalesce("deg", F.lit(0)).alias("deg")
+    )
+
+
+def _contributions(e: DataFrame, state: DataFrame) -> DataFrame:
+    """One power-iteration message pass: the rank mass each node
+    receives over its in-edges → (dst, contrib)."""
+    return (
+        e.join(state, e["src"] == state["node"])
+        .filter(F.col("deg") > 0)
+        .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
+        .groupBy("dst")
+        .agg(F.sum("c").alias("contrib"))
+    )
+
+
+def _power_iterate(
+    e: DataFrame,
+    state: DataFrame,
+    iters: int,
+    damping: float,
+    restart: Column,
+    spread: Column,
+) -> DataFrame:
+    """Run ``iters`` power-iteration steps over materialized edges
+    ``e`` from ``state`` (node, deg, ..., rank):
+    rank' = restart + damping · (contributions + spread). ``restart``
+    is the node's teleport term and ``spread`` its share of the mass
+    ``dm`` parked on dangling nodes; both are columns of the state
+    (pagerank: uniform over |V|; personalized: the restart vector p).
+    State columns other than rank ride along unchanged."""
+    keep = [c for c in state.columns if c != "rank"]
+    for i in range(iters):
+        contribs = _contributions(e, state)
+        dangling = state.filter(F.col("deg") == 0).agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
+        )
+        state = (
+            state.join(contribs, state["node"] == contribs["dst"], "left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                *keep,
+                (
+                    restart
+                    + F.lit(damping) * (F.coalesce("contrib", F.lit(0.0)) + spread)
+                ).alias("rank"),
+            )
+        )
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < iters:
+            state = state.localCheckpoint(eager=True)
+    return state
 
 
 def pagerank(
@@ -68,9 +197,7 @@ def pagerank(
     dst: str = "dst",
     iters: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 2,
     pre_partitioned: bool = False,
-    edge_storage: str | None = None,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list. Returns
@@ -90,93 +217,25 @@ def pagerank(
     iterations land closer to the new fixed point than 2 cold ones,
     and a converged vector fed back is already at the fixed point.
 
-    ``checkpoint_every=2`` is measured, not arbitrary: each iteration
-    references the previous state THREE times (contributions, dangling
-    mass, next state), so an unmaterialized segment of length L
-    re-derives its head up to 3^L times. At sf0.1 (6 iterations,
-    ~590 k edges): every-4 = 4.7 s, every-2 = 4.1 s, every-1 = 4.0 s
-    but with per-iteration checkpoint overhead that grows with |V| and
-    higher variance — every-2 bounds the branching at 3² while paying
-    half the checkpoints."""
-    # Materialize the edge list ONCE (localCheckpoint, lineage severed):
-    # every iteration joins it, and without this the upstream plan
-    # (scans, joins, distinct) re-executes per iteration. Repartition
-    # BEFORE materializing: a materialized plan freezes its partitioning
-    # and is exempt from AQE coalescing, so freezing at the session's
-    # shuffle.partitions (e.g. a vanilla session's 200) would pin every
-    # iteration to hundreds of near-empty tasks — measured 15s → 272s at
-    # sf0.01 with a plain .cache(). defaultParallelism is cluster-
-    # proportional, and hashing on src co-partitions the materialized
-    # edges with the per-iteration contribution join key.
-    # pre_partitioned=True: the caller vouches the input is already
-    # hash-distributed on src — e.g. a src-bucketed table scan, whose
-    # bucket hash IS the shuffle hash — so the |E|-sized repartition is
-    # skipped entirely. At 100 TB that per-run edge shuffle is the
-    # single biggest one-time stage PageRank pays; a bucketed layout
-    # pays it once at ingest and amortizes it over every later run
-    # (SCALE.md §graph).
-    pre = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not pre_partitioned:
-        par = max(edges.sparkSession.sparkContext.defaultParallelism, 1)
-        pre = pre.repartition(par, "src")
-    global _LAST_EDGE_EXCHANGES
-    _LAST_EDGE_EXCHANGES = pre._jdf.queryExecution().executedPlan().toString().count(
-        "Exchange"
-    )
-    # Two edge-materialization modes, measured at sf0.1 local[32]:
-    #
-    # "checkpoint" (default for in-session edge frames): localCheckpoint
-    #   stores raw rows and re-scans them for free, BUT its LogicalRDD
-    #   drops outputPartitioning, so every iteration's rank join
-    #   re-shuffles the edge table on src (one extra ENSURE_REQUIREMENTS
-    #   exchange per iteration). In LOCAL mode that shuffle is a cheap
-    #   disk spill and this path wins: 5.2 s vs 8.4 s.
-    #
-    # "persist" (default when pre_partitioned, i.e. a bucketed layout):
-    #   InMemoryRelation preserves the cached plan's HashPartitioning
-    #   (the repartition above, or the bucket layout), so the
-    #   per-iteration edge-side exchange DISAPPEARS — only the
-    #   partial-aggregated contribution shuffle and (at most) the
-    #   |V|-sized state shuffle remain (asserted via
-    #   _LAST_ITER_EXCHANGES in tests/test_graph).
-    #   Locally the columnar decode per iteration costs more than the
-    #   shuffle it saves; on a 1000-executor cluster the saved exchange
-    #   is |E| over the NETWORK per iteration, which dominates — use
-    #   "persist" (plus a src-bucketed edge table) at cluster scale.
-    if edge_storage is None:
-        edge_storage = "persist" if pre_partitioned else "checkpoint"
-    if edge_storage == "persist":
-        e = pre.persist()
-        e.count()
-    else:
-        e = pre.localCheckpoint(eager=True)
-    # Observable for the regression test: the materialized edge
-    # partition count drives every iteration's task count. If this ever
-    # reads shuffle.partitions (e.g. 200 in a vanilla session) instead
-    # of defaultParallelism, the 15s -> 272s trap is back.
-    global _LAST_EDGE_PARTITIONS
-    _LAST_EDGE_PARTITIONS = e.rdd.getNumPartitions()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    ``pre_partitioned=True`` declares the input hash-distributed on src
+    (a src-bucketed table); the edges are then persisted rather than
+    checkpointed, see ``_directed_edges``. At 100 TB the per-run edge
+    shuffle is the single biggest one-time stage PageRank pays; a
+    bucketed layout pays it once at ingest and amortizes it over every
+    later run (SCALE.md §graph)."""
+    e = _directed_edges(edges, src, dst, pre_partitioned)
+    nodes = _node_set(e)
     n_nodes = nodes.count()
     if n_nodes == 0:
         # Release the edge cache before bailing: on the persist path the
         # CacheManager entry is catalog-held even for empty data, and a
         # long-lived session calling pagerank on empty graphs would pin
         # one entry per call (ADVICE r5).
-        if edge_storage == "persist":
+        if pre_partitioned:
             e.unpersist()
         return nodes.withColumn("rank", F.lit(0.0))
 
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # degree rides with the rank vector so the per-iteration join is
-    # rank ⋈ edges only
-    base = nodes.join(out_deg, nodes["node"] == out_deg["src"], "left").select(
-        "node", F.coalesce("deg", F.lit(0)).alias("deg")
-    )
+    base = _out_degrees(e, nodes)
     if init_ranks is None:
         # Materialize base (|V| rows: node, deg) before iterating (r15):
         # state_0 embeds it, and every iteration references the previous
@@ -209,45 +268,15 @@ def pagerank(
             .select("node", "deg", (F.col("rank") / F.col("_t")).alias("rank"))
             .localCheckpoint(eager=True)
         )
-    global _LAST_ITER_EXCHANGES
-    for i in range(iters):
-        contribs = (
-            e.join(state, e["src"] == state["node"])
-            .filter(F.col("deg") > 0)
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        if i == 0:
-            # ENSURE_REQUIREMENTS counts only runtime exchanges (the
-            # cached edge build's one-time repartition is tagged
-            # REPARTITION_BY_NUM inside the InMemoryRelation subtree)
-            _LAST_ITER_EXCHANGES = (
-                contribs._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-                .count("ENSURE_REQUIREMENTS")
-            )
-        # mass parked on dangling nodes redistributes uniformly
-        dangling = state.filter(F.col("deg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        state = (
-            state.join(contribs, state["node"] == contribs["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "deg",
-                (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.col("dm") / n_nodes)
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            state = state.localCheckpoint(eager=True)
-    if edge_storage == "persist":
+    state = _power_iterate(
+        e,
+        state,
+        iters,
+        damping,
+        restart=F.lit((1.0 - damping) / n_nodes),
+        spread=F.col("dm") / n_nodes,
+    )
+    if pre_partitioned:
         # sever the returned frame's lineage from the cached edge table,
         # then release it: CacheManager entries are NOT reclaimed by GC
         # (unlike localCheckpoint RDDs), so a long-lived session running
@@ -265,7 +294,6 @@ def personalized_pagerank(
     dst: str = "dst",
     iters: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart): the teleport
     step jumps to the given ``teleport`` node set (column ``node``,
@@ -275,67 +303,34 @@ def personalized_pagerank(
     PageRank", WWW 2002). Dangling mass also restarts at the seeds, so
     ranks still sum to 1.
 
-    Same measured plan discipline as ``pagerank`` (repartition before
-    materializing, eager checkpoints every ``checkpoint_every``); the
-    teleport vector rides the state frame as a constant column, so the
-    per-iteration shape is identical — one |E| contribution shuffle +
-    one |V| state join, nothing teleport-sized is ever broadcast except
-    the 1-row dangling aggregate."""
-    par = max(edges.sparkSession.sparkContext.defaultParallelism, 1)
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    Same iteration body as ``pagerank``; the teleport vector rides the
+    state frame as a constant column ``p``, so the per-iteration shape
+    is identical — one |E| contribution shuffle + one |V| state join,
+    nothing teleport-sized is ever broadcast except the 1-row dangling
+    aggregate."""
+    e = _directed_edges(edges, src, dst)
+    nodes = _node_set(e)
     seeds = teleport.select(F.col("node")).distinct().join(nodes, "node", "left_semi")
     m = seeds.count()
     if m == 0:
         raise ValueError("personalized_pagerank: no teleport node exists in the graph")
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     base = (
-        nodes.join(out_deg, nodes["node"] == out_deg["src"], "left")
-        .select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
+        _out_degrees(e, nodes)
         .join(seeds.withColumn("_s", F.lit(1)), "node", "left")
         # p(v): the restart distribution, constant across iterations
-        .select(
-            "node", "deg", (F.coalesce("_s", F.lit(0)) / m).alias("p")
-        )
+        .select("node", "deg", (F.coalesce("_s", F.lit(0)) / m).alias("p"))
     )
     # start AT the restart distribution (the conventional PPR start;
     # the fixed point is start-independent regardless)
     state = base.withColumn("rank", F.col("p")).localCheckpoint(eager=True)
-    for i in range(iters):
-        contribs = (
-            e.join(state, e["src"] == state["node"])
-            .filter(F.col("deg") > 0)
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        dangling = state.filter(F.col("deg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        state = (
-            state.join(contribs, state["node"] == contribs["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "deg",
-                "p",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.col("dm") * F.col("p"))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            state = state.localCheckpoint(eager=True)
+    state = _power_iterate(
+        e,
+        state,
+        iters,
+        damping,
+        restart=F.lit(1.0 - damping) * F.col("p"),
+        spread=F.col("dm") * F.col("p"),
+    )
     return state.select("node", "rank")
 
 
@@ -388,33 +383,15 @@ def triangle_counts(
     pay-at-ingest layout x_pagerank_bucketed_edges models. The
     canonicalize-distinct shuffle and its checkpoint are skipped
     entirely (the table IS the materialization); only the oriented
-    frame is checkpointed. _LAST_TRI_CANON_EXCHANGES records the
-    exchange count of the canonical-edge frame — 0 from a table scan,
-    >=1 when the operator had to canonicalize.
+    frame is checkpointed.
     """
-    from pyspark import StorageLevel
-
-    global _LAST_TRI_CANON_EXCHANGES
     if assume_canonical:
         und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        _LAST_TRI_CANON_EXCHANGES = len(_ensure_exchange_ids(und))
     else:
-        pre = (
-            edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-            .distinct()
+        und = _canonical_edges(edges, src, dst).localCheckpoint(
+            eager=True, storageLevel=StorageLevel.DISK_ONLY
         )
-        # count on the PRE-checkpoint plan: the checkpointed frame is a
-        # LogicalRDD scan that no longer shows the canonicalize shuffle
-        _LAST_TRI_CANON_EXCHANGES = len(_ensure_exchange_ids(pre))
-        und = pre.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(und, "deg")
     da = deg.select(F.col("node").alias("a"), F.col("deg").alias("da"))
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("db"))
     with_deg = und.join(da, "a").join(db, "b")
@@ -482,26 +459,14 @@ def k_core(
     (tests assert convergence, not plan shape, because the graph here
     is small; the exchange discipline is pagerank's, already pinned).
     """
-    cur = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    cur = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
     n_edges = cur.count()
     converged = False
     for _ in range(max_rounds):
         if n_edges == 0:
             converged = True
             break
-        deg = (
-            cur.select(F.col("a").alias("node"))
-            .unionByName(cur.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("node")
+        keep = _degrees(cur, "d").filter(F.col("d") >= k).select("node")
         nxt = (
             cur.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
@@ -514,13 +479,7 @@ def k_core(
             converged = True
             break
         n_edges = n_next
-    deg = (
-        cur.select(F.col("a").alias("node"))
-        .unionByName(cur.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-    )
-    return deg.withColumn("converged", F.lit(converged))
+    return _degrees(cur, "core_degree").withColumn("converged", F.lit(converged))
 
 
 def label_propagation(
@@ -549,22 +508,12 @@ def label_propagation(
     hash-partitioned on node, so a cluster co-partitions every stage;
     state is 2 columns x |V|. Lineage truncated with an eager
     localCheckpoint per round (the pagerank idiom)."""
-    und = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
     labels = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .distinct()
+        _node_set(und, "a", "b")
         .select("node", F.col("node").alias("lbl"))
         .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Window
-
     for _ in range(rounds):
         nbr = und.join(
             labels.select(F.col("node").alias("b"), "lbl"), "b"
@@ -615,13 +564,7 @@ def adamic_adar(
     graph-op idiom; an unmaterialized frame re-derives its whole
     subtree per reference (measured here: 41 → 8 plan exchanges).
     """
-    und = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
     adj = und.select(F.col("a").alias("z"), F.col("b").alias("x")).unionByName(
         und.select(F.col("b").alias("z"), F.col("a").alias("x"))
     )
@@ -644,14 +587,42 @@ def adamic_adar(
     return pairs.join(und, ["a", "b"], "left_anti")
 
 
+def _propagate(e: DataFrame, scores: DataFrame, via: str, to: str) -> DataFrame:
+    """One HITS half-step: every edge carries its ``via`` endpoint's
+    score s to its ``to`` endpoint, summed per receiving node →
+    (node, s)."""
+    return (
+        e.join(scores.withColumnRenamed("node", via), via)
+        .groupBy(to)
+        .agg(F.sum("s").alias("s"))
+        .withColumnRenamed(to, "node")
+    )
+
+
+def _hits_edges(
+    edges: DataFrame, src: str, dst: str, pre_partitioned: bool
+) -> tuple[DataFrame, DataFrame]:
+    """HITS's distinct directed edges, materialized twice over: e_src
+    partitioned for the authority update and e_dst for the hub update.
+    Without ``pre_partitioned`` both are the same checkpointed frame."""
+    pre = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e_src = _directed_edges(pre, pre_partitioned=pre_partitioned)
+    if not pre_partitioned:
+        return e_src, e_src
+    # dst-partitioned twin, built once FROM the cached copy (no upstream
+    # re-derivation), so the hub-update join is edge-side exchange-free
+    # too
+    e_dst = e_src.repartition(_parallelism(edges), "dst").persist()
+    e_dst.count()
+    return e_src, e_dst
+
+
 def hits(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iters: int = 4,
-    checkpoint_every: int = 2,
     pre_partitioned: bool = False,
-    edge_storage: str | None = None,
 ) -> DataFrame:
     """HITS (Kleinberg 1999) hubs-and-authorities over a directed edge
     list, run for EXACTLY ``iters`` synchronized iterations and
@@ -670,8 +641,7 @@ def hits(
     exchanges at 4 iterations). Raw magnitudes grow like
     (d_in·d_out)^iters — for small fixed ``iters`` that is nowhere
     near double overflow on any real graph; long runs should rescale
-    periodically (at ``checkpoint_every`` boundaries) before adding
-    iterations.
+    periodically (at checkpoint boundaries) before adding iterations.
 
     Fixed-iteration contract, same reasoning as pagerank/k_core: a
     total deterministic function of (graph, iters) the oracle unrolls
@@ -682,54 +652,28 @@ def hits(
     Scale: per iteration one |E|-row hub-score join grouped on dst
     (authority update) + one |E|-row authority-score join grouped on
     src (hub update), both hash-partitioned on node ids — the pagerank
-    exchange discipline, with edge materialization and
-    per-``checkpoint_every`` lineage truncation inherited verbatim.
+    exchange discipline, with edge materialization and every-2 lineage
+    truncation inherited verbatim.
 
-    ``edge_storage`` / ``pre_partitioned`` follow pagerank's bucketed
-    discipline (VERDICT r7 #3), with a HITS-specific twist: the two
-    per-iteration joins key on DIFFERENT columns (src for the
-    authority update, dst for the hub update), so "persist" caches TWO
-    hash-partitioned copies of the edge list — e_src and e_dst — each
-    co-partitioned with its join. A src-bucketed table
-    (``pre_partitioned=True``) feeds e_src with ZERO setup exchanges
+    ``pre_partitioned`` follows pagerank's bucketed discipline (VERDICT
+    r7 #3), with a HITS-specific twist: the two per-iteration joins key
+    on DIFFERENT columns (src for the authority update, dst for the hub
+    update), so the persisted path caches TWO hash-partitioned copies of
+    the edge list — e_src and e_dst — each co-partitioned with its join.
+    A src-bucketed table feeds e_src with ZERO setup exchanges
     (``distinct`` on (src,dst) is satisfied by HashPartitioning(src) —
     the bucket hash clusters a superset-keyed aggregation, so no
     exchange is inserted); e_dst always costs one |E| shuffle at setup,
     paid ONCE from the already-cached e_src and amortized over every
-    iteration. "checkpoint" (the local-mode default, same measured
-    trade as pagerank) stores one copy and lets each iteration
-    re-shuffle the edge side as spilled-disk exchanges."""
+    iteration. The checkpointed default (same measured local-mode trade
+    as pagerank) stores one copy and lets each iteration re-shuffle the
+    edge side as spilled-disk exchanges."""
     if iters < 1:
         raise ValueError(f"hits: iters must be >= 1 (got {iters})")
-    pre = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    par = max(edges.sparkSession.sparkContext.defaultParallelism, 1)
-    if edge_storage is None:
-        edge_storage = "persist" if pre_partitioned else "checkpoint"
-    global _LAST_HITS_EDGE_EXCHANGES, _LAST_HITS_ITER_EXCHANGES
-    if edge_storage == "persist":
-        built = pre if pre_partitioned else pre.repartition(par, "src")
-        _LAST_HITS_EDGE_EXCHANGES = (
-            built._jdf.queryExecution().executedPlan().toString().count("Exchange")
-        )
-        e_src = built.persist()
-        e_src.count()
-        # dst-partitioned twin, built once FROM the cached copy (no
-        # upstream re-derivation), so the hub-update join is edge-side
-        # exchange-free too
-        e_dst = e_src.repartition(par, "dst").persist()
-        e_dst.count()
-    else:
-        e_src = pre.repartition(par, "src").localCheckpoint(eager=True)
-        _LAST_HITS_EDGE_EXCHANGES = 1
-        e_dst = e_src
-    nodes = (
-        e_src.select(F.col("src").alias("node"))
-        .unionByName(e_src.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e_src, e_dst = _hits_edges(edges, src, dst, pre_partitioned)
+    nodes = _node_set(e_src).localCheckpoint(eager=True)
     if nodes.count() == 0:
-        if edge_storage == "persist":
+        if pre_partitioned:
             e_src.unpersist()
             e_dst.unpersist()
         return nodes.withColumn("authority", F.lit(0.0)).withColumn("hub", F.lit(0.0))
@@ -737,54 +681,24 @@ def hits(
 
     auth = None
     for i in range(iters):
-        auth = (
-            e_src.join(hub.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum("s").alias("s"))
-            .withColumnRenamed("dst", "node")
-        )
+        auth = _propagate(e_src, hub, "src", "dst")
         # Checkpoint placement (r15): at a boundary, materialize auth
-        # BEFORE building hub from it. The previous shape checkpointed
-        # (auth, hub) as a pair AFTER both were built, so hub's plan
-        # still referenced the pre-checkpoint auth subtree and the hub
-        # checkpoint re-derived the whole auth chain of the segment a
-        # second time — the final post-loop pair paid a full extra
-        # segment. The final iteration is now a boundary too (it
-        # replaces the post-loop double checkpoint, same frames, same
-        # math). Measured at sf0.1 local[32], interleaved fresh-process
-        # rounds on the supplier query shape: 7.98/6.60 s → 5.82/5.62 s.
-        boundary = ((i + 1) % checkpoint_every == 0) or i == iters - 1
+        # BEFORE building hub from it, so the hub checkpoint reads it
+        # instead of re-deriving the segment's auth chain a second time.
+        # The final iteration is a boundary too: the final frames are
+        # each read twice (normalizer agg + output join), and the
+        # checkpoint severs lineage from the cached edge tables so the
+        # persisted path can release them (CacheManager entries are not
+        # GC-reclaimed — pagerank's recurring-job discipline). Measured
+        # at sf0.1 local[32], interleaved fresh-process rounds on the
+        # supplier query shape: 7.98/6.60 s → 5.82/5.62 s.
+        boundary = (i + 1) % _CHECKPOINT_EVERY == 0 or i == iters - 1
         if boundary:
             auth = auth.localCheckpoint(eager=True)
-        hub = (
-            e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.sum("s").alias("s"))
-            .withColumnRenamed("src", "node")
-        )
-        if i == 0:
-            # runtime-exchange observable (pagerank's ENSURE_REQUIREMENTS
-            # convention, plan_id-deduped): the persist path must show
-            # strictly fewer — both |E|-row edge sides arrive
-            # pre-partitioned from cache. The cached builds' own
-            # exchanges (the distinct + the dst repartition) are
-            # subtracted: they are one-time setup, reprinted into every
-            # referencing plan by the InMemoryRelation dump.
-            noise: set[str] = set()
-            if edge_storage == "persist":
-                noise = _ensure_exchange_ids(e_src) | _ensure_exchange_ids(e_dst)
-            _LAST_HITS_ITER_EXCHANGES = len(_ensure_exchange_ids(hub) - noise)
+        hub = _propagate(e_dst, auth, "dst", "src")
         if boundary:
-            # auth was already materialized above, so this checkpoint
-            # reads it instead of re-deriving the segment's auth chain.
-            # The final boundary also covers the normalizer below: the
-            # final frames are each read twice (normalizer agg + output
-            # join), and the checkpoint severs lineage from the cached
-            # edge tables so the persist path can release them
-            # (CacheManager entries are not GC-reclaimed — pagerank's
-            # recurring-job discipline).
             hub = hub.localCheckpoint(eager=True)
-    if edge_storage == "persist":
+    if pre_partitioned:
         e_src.unpersist()
         e_dst.unpersist()
 
@@ -827,12 +741,7 @@ def modularity(edges: DataFrame, labels: DataFrame, src: str = "src", dst: str =
     lb = labels.select(F.col("node").alias(dst), F.col("community").alias("_cb"))
     e2 = edges.select(src, dst).join(la, src).join(lb, dst)
     intra = e2.filter(F.col("_ca") == F.col("_cb")).agg(F.count(F.lit(1)).alias("e_in"))
-    deg = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(edges, "d", src, dst)
     dc = deg.join(labels, "node").groupBy("community").agg(F.sum("d").alias("d_c"))
     dc_tot = dc.agg(
         F.count(F.lit(1)).alias("n_communities"),
@@ -865,12 +774,7 @@ def degree_assortativity(edges: DataFrame, src: str = "src", dst: str = "dst") -
     discipline). Plan: degree agg + two node-keyed degree joins + one
     global integer agg. Σ(dₐ·d_b) needs the decimal(38) variant past
     ~3e9 summed degree products."""
-    deg = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(edges, "d", src, dst)
     da = deg.select(F.col("node").alias(src), F.col("d").alias("_da"))
     db = deg.select(F.col("node").alias(dst), F.col("d").alias("_db"))
     s = (
@@ -925,16 +829,7 @@ def bfs_hops(
     round (the pagerank idiom); distances accumulate append-only, so
     no per-round rewrite of the settled set.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-    )
-    und = (
-        und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _symmetric_edges(edges, src, dst).localCheckpoint(eager=True)
     dist = (
         seeds.select(F.col("node"))
         .distinct()
@@ -987,15 +882,7 @@ def wl_refinement(
     (localCheckpoint). Collision caveat: labels are 128-bit md5 —
     collisions are cryptographically negligible and identical on both
     engines anyway."""
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-    )
-    und = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
+    und = _symmetric_edges(edges, src, dst).localCheckpoint(eager=True)
     labels = (
         und.groupBy(F.col("a").alias("node"))
         .agg(F.count(F.lit(1)).alias("d"))
@@ -1043,13 +930,7 @@ def jaccard_links(
     center, two broadcast-size degree joins for the endpoints, one
     anti-join against the edge set — node-keyed exchanges throughout,
     the adamic_adar/triangle discipline."""
-    und = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
     adj = und.select(F.col("a").alias("z"), F.col("b").alias("x")).unionByName(
         und.select(F.col("b").alias("z"), F.col("a").alias("x"))
     )
@@ -1094,15 +975,8 @@ def degree_distribution(
     edge list — the symmetrizing union references it twice, and
     without the checkpoint the whole upstream edge build re-derives
     per side (measured 11 → 7 exchanges on the co-purchase query)."""
-    und = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    adj = und.select(F.col("a").alias("z")).unionByName(und.select(F.col("b").alias("z")))
-    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("degree"))
+    und = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
+    deg = _degrees(und, "degree")
     return deg.groupBy("degree").agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
 
 
@@ -1112,7 +986,6 @@ def katz_centrality(
     dst: str = "dst",
     iters: int = 4,
     alpha_inv: int = 20,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Truncated Katz centrality over a DIRECTED edge list:
     c(v) = Σ_{k=1..iters} α^k · walks_k(v), with walks_k(v) the number
@@ -1145,30 +1018,14 @@ def katz_centrality(
     Scale: per iteration, ONE |E|-row join keyed on src against the
     |V|-row walk state + ONE dst-keyed integer aggregation — pagerank's
     exchange shape exactly, with the edge table repartitioned on the
-    join key once and localCheckpoint-ed (every ``checkpoint_every``
-    rounds for the state, bounding re-derivation like pagerank's
-    measured every-2 choice)."""
+    join key once and localCheckpoint-ed, and every walk level
+    materialized (see the loop)."""
     if iters < 1:
         raise ValueError(f"katz_centrality: iters must be >= 1, got {iters}")
     if alpha_inv < 2:
         raise ValueError(f"katz_centrality: alpha_inv must be >= 2, got {alpha_inv}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"katz_centrality: checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    spark = edges.sparkSession
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _directed_edges(edges, src, dst)
+    nodes = _node_set(e).localCheckpoint(eager=True)
     # walks_1 = in-degree (walks_0 ≡ 1 everywhere).
     w = e.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("w")
@@ -1181,12 +1038,9 @@ def katz_centrality(
             ).agg(F.sum("w").cast("long").alias("w"))
         # Every w_k has TWO consumers — the k+1 recurrence and the final
         # per-node combine — so an unmaterialized w_k is re-derived by
-        # whichever consumer runs after the other's action (the final
-        # combine re-paid w1 and w3 under the old cadence-only rule).
+        # whichever consumer runs after the other's action.
         # Materialize each round (r15; measured interleaved at sf0.1:
         # 5.58/5.94 s → 5.31/5.50 s for x_katz_copurchase's shape).
-        # checkpoint_every stays validated for API compatibility; every
-        # round satisfies any cadence, so this is a strict refinement.
         w = w.localCheckpoint(eager=True)
         walks.append(w.withColumnRenamed("w", f"w{k}"))
     out = nodes

@@ -1439,9 +1439,9 @@ def _copurchase_tri_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared oriented-wedge computation behind x_triangle_copurchase
     AND x_clustering_coefficient (VERDICT r11 #3). Built ONCE per
     (session, data root): the canonical edge list comes from the
-    bucketed ingest layout (zero canonicalize exchanges —
-    graph._LAST_TRI_CANON_EXCHANGES == 0, asserted in
-    tests/test_graph.py), the O(|E|^1.5) degree-ordered wedge join runs
+    bucketed ingest layout (no canonicalize shuffle or checkpoint —
+    triangle_counts(assume_canonical=True), whose skipped jobs
+    tests/test_graph.py pins), the O(|E|^1.5) degree-ordered wedge join runs
     once, and the result is checkpointed DISK_ONLY and memoized, so
     the second consumer pays only its own ranking tail. At 100 TB this
     is exactly how a graph-metrics pass runs: one oriented-wedge sweep
@@ -1478,10 +1478,11 @@ def x_pagerank_bucketed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB. The first call per scale factor builds the edge list
     (orders ⋈ lineitem, distinct) and writes it bucketed by src; every
     later call scans the bucketed table with ZERO exchanges in the edge
-    materialization (graph._LAST_EDGE_EXCHANGES == 0: the bucket hash
-    IS the shuffle hash) and runs pagerank(pre_partitioned=True), whose
-    persisted edge cache keeps the bucket partitioning so no iteration
-    re-shuffles the edge table (graph._LAST_ITER_EXCHANGES == 2,
+    materialization (the bucket hash IS the shuffle hash) and runs
+    pagerank(pre_partitioned=True), whose persisted edge cache keeps
+    the bucket partitioning so no iteration re-shuffles the edge table:
+    only the contribution aggregation, plus the |V|-row state join when
+    the state is too big to broadcast, shuffles per iteration (both
     asserted in tests/test_graph.py). Identical ranks to
     x_pagerank_suppliers — same unrolled-SQL oracle. The amortized-run
     path is what the bench's min-of-3 measures; run 1 pays the one-time
@@ -3119,10 +3120,10 @@ def x_hits_bucketed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay-at-ingest): the bucketed scan feeds
     hits(pre_partitioned=True), so the src edge copy materializes with
     ZERO exchanges (the bucket hash clusters the (src,dst) distinct
-    too) and "persist" keeps both per-iteration edge sides exchange-
-    free (the dst twin is built once from the cached src copy;
-    runtime exchanges 5 → 3 per iteration, asserted via the
-    plan_id-deduped observables in tests/test_graph.py). Identical
+    too) and the persisted path keeps both per-iteration edge sides
+    exchange-free (the dst twin is built once from the cached src copy;
+    runtime exchanges 5 → 3 per iteration, asserted on plan_id-deduped
+    plans in tests/test_graph.py). Identical
     scores to x_hits_suppliers — same unrolled-SQL oracle. The same
     local/cluster inversion note as the pagerank twin applies: locally
     the cached columnar decode costs more than spilled-disk shuffles;

@@ -1019,6 +1019,10 @@ def apply_erasure_batch(batch_df: DataFrame, batch_id: int, store_path: str) -> 
 
     def _count(item):
         name, df = item
+        # Per-thread job labels: a job description is a thread-local
+        # property, and each Python pool thread maps to its own JVM thread
+        # only in pinned-thread mode (PYSPARK_PIN_THREAD, the default since
+        # Spark 3.2). Without it the pool threads would share labels.
         df.sparkSession.sparkContext.setJobDescription(f"erasure dsar count: {name}")
         return name, df.count()
 

@@ -226,7 +226,7 @@ def test_connected_components_raises_on_nonconvergence(spark):
     assert set(labels.values()) == {1}
 
 
-def test_connected_components_star_matches_propagation(spark):
+def test_connected_components_star_matches_propagation(spark, count_jobs):
     import random
 
     rng = random.Random(11)
@@ -251,12 +251,13 @@ def test_connected_components_star_matches_propagation(spark):
     assert star == prop
     # chain collapses to one component labeled by its min node
     assert all(star[1000 + i] == 1000 for i in range(61))
-    # the bounded driver union-find fast path must agree with both
-    fast = {
-        r["node"]: r["label"] for r in D.connected_components(pairs).collect()
-    }
+    # the bounded driver union-find fast path must agree with both, in
+    # a fixed number of jobs: materialize, probe, collect — no rounds
+    fast, jobs = count_jobs(
+        lambda: {r["node"]: r["label"] for r in D.connected_components(pairs).collect()}
+    )
     assert fast == prop
-    assert D._LAST_CC_ROUNDS == 0  # fast path reports closed-form marker
+    assert jobs == 6
 
 
 def test_exact_pair_oracles_guard_against_large_input(spark):
@@ -447,7 +448,7 @@ def test_minhash_incremental_empty_batch_returns_empty(spark, sf_dir):
     assert out2.count() == 0
 
 
-def test_connected_components_warm_start_append_only(spark):
+def test_connected_components_warm_start_append_only(spark, count_jobs):
     """Warm-start CC on an append-only pair stream: prior labels seed
     propagation, the min-id contract is preserved through component
     merges, and convergence takes fewer rounds than a cold run."""
@@ -456,18 +457,20 @@ def test_connected_components_warm_start_append_only(spark):
     l1 = D.connected_components(p1, small_graph_max_edges=0)
     # append pairs that EXTEND and MERGE components
     p2 = spark.createDataFrame(chain, "id_a long, id_b long")
-    cold = {
-        r["node"]: r["label"]
-        for r in D.connected_components(p2, small_graph_max_edges=0).collect()
-    }
-    cold_rounds = D._LAST_CC_ROUNDS
-    warm = {
-        r["node"]: r["label"]
-        for r in D.connected_components(
-            p2, init_labels=l1, small_graph_max_edges=0
-        ).collect()
-    }
-    warm_rounds = D._LAST_CC_ROUNDS
+    cold, cold_jobs = count_jobs(
+        lambda: {
+            r["node"]: r["label"]
+            for r in D.connected_components(p2, small_graph_max_edges=0).collect()
+        }
+    )
+    warm, warm_jobs = count_jobs(
+        lambda: {
+            r["node"]: r["label"]
+            for r in D.connected_components(
+                p2, init_labels=l1, small_graph_max_edges=0
+            ).collect()
+        }
+    )
     # and the fast path (which ignores init_labels by design) must match
     fast = {
         r["node"]: r["label"]
@@ -476,7 +479,8 @@ def test_connected_components_warm_start_append_only(spark):
     assert fast == cold
     assert warm == cold  # same clustering, min-id labels
     assert set(warm.values()) == {0}
-    assert warm_rounds < cold_rounds, (warm_rounds, cold_rounds)
+    # fewer propagation rounds, each a fixed number of jobs
+    assert warm_jobs < cold_jobs, (warm_jobs, cold_jobs)
 
 
 def test_bracket_verdicts_flip_on_regressions(spark, sf_dir):
